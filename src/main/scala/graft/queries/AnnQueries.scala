@@ -548,15 +548,10 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
           .as("embedding"))
       .withColumn("v_norm", Similarity.norm(col("embedding")))
 
-  /** Serving-path candidates for the novel queries: centroid-assign
-    * against the stored pivot, probe the top-`nprobe` stored cells
-    * ([[ivfServeNprobe]] unless overridden by the sweep harness),
-    * dedup replicated candidates by (query, vec). Shared by the
-    * top-k serving query and the recall measurement.
-    */
   /** Serving nprobe scales with the cell count: nprobe =
-    * max(4, round(k/3)). The r8 sweep (`IvfProbeSweep`, sf0.1, k=45,
-    * 24 distinct novel queries) measured the recall-vs-nprobe curve:
+    * max(4, round(k/3)). An r8 offline sweep (sf0.1, k=45, 24
+    * distinct novel queries, one serving pass per nprobe) measured
+    * the recall-vs-nprobe curve:
     * 2→0.25, 4→0.50, 6→0.58, 8→0.67, 10→0.71, 12→0.83, 16→0.96
     * (since r9 the {2,4,8} points are a hash-checked oracle query,
     * [[xAnnRecallCurve]]) —
@@ -633,9 +628,13 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
       .repartition(col("query_id"))
       .groupBy("query_id", "vec_id").agg(max(col("cos")).as("cos"))
 
-  private[queries] def novelCandidates(spark: SparkSession, dir: String,
-      nprobeOverride: Option[Int] = None): DataFrame =
-    servingCandidates(spark, dir, novelQueries(spark), nprobeOverride)
+  /** Serving-path candidates for the novel queries: centroid-assign
+    * against the stored pivot, probe the top-[[ivfServeNprobe]] stored
+    * cells, dedup replicated candidates by (query, vec). Shared by the
+    * top-k serving query and the recall measurement.
+    */
+  private[queries] def novelCandidates(spark: SparkSession, dir: String): DataFrame =
+    servingCandidates(spark, dir, novelQueries(spark), nprobeOverride = None)
 
   /** PUBLIC online-serving entry: top-[[NovelQueryK]] ANN results for
     * an arbitrary (query_id, embedding) query relation against the
@@ -657,13 +656,12 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
   }
 
   def xAnnQueryNovel(spark: SparkSession, dir: String): DataFrame =
-    annQueryNovelAt(spark, dir, nprobeOverride = None)
+    annQueryNovelAt(spark, dir)
 
-  private[queries] def annQueryNovelAt(spark: SparkSession, dir: String,
-      nprobeOverride: Option[Int]): DataFrame = {
+  private[queries] def annQueryNovelAt(spark: SparkSession, dir: String): DataFrame = {
     val byQuery = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("vec_id"))
-    novelCandidates(spark, dir, nprobeOverride)
+    novelCandidates(spark, dir)
       .withColumn("rank", row_number().over(byQuery).cast(LongType))
       .filter(col("rank") <= NovelQueryK)
       .select("query_id", "rank", "vec_id", "cos")
@@ -686,7 +684,7 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
     * real scale); the served leg reuses the stored-index probe.
     */
   def xAnnNovelRecall(spark: SparkSession, dir: String): DataFrame =
-    annNovelRecallAt(spark, dir, nprobeOverride = None)
+    annNovelRecallAt(spark, dir)
 
   /** Brute-force exact top-1 for the novel query set — the
     * measurement leg (|Q|·corpus by contract) shared by the FP and
@@ -709,10 +707,9 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
       .select(col("query_id"), col("vec_id").as("exact_id"))
   }
 
-  private[queries] def annNovelRecallAt(spark: SparkSession, dir: String,
-      nprobeOverride: Option[Int]): DataFrame = {
+  private[queries] def annNovelRecallAt(spark: SparkSession, dir: String): DataFrame = {
     val exact = novelExactTop1(spark, dir)
-    val served = annQueryNovelAt(spark, dir, nprobeOverride)
+    val served = annQueryNovelAt(spark, dir)
       .filter(col("rank") === 1L)
       .select(col("query_id"), col("vec_id").as("ann_id"))
     exact.join(served, Seq("query_id"), "left")
@@ -909,7 +906,7 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
     // actually applied if the stored set ever changed).
     val ts = annTombstones(spark, dir)
       .select(col("vec_id"), lit(1L).as("is_ts"))
-    val top = novelCandidates(spark, dir, nprobeOverride = None)
+    val top = novelCandidates(spark, dir)
       .join(broadcast(ts), Seq("vec_id"), "left")
       .groupBy("query_id")
       .agg(
@@ -1371,7 +1368,7 @@ private[queries] trait AnnQueries { this: ExtQueries.type =>
     val sq8 = xAnnSq8(spark, dir)
       .filter(col("rank") === 1L)
       .select(col("query_id"), col("vec_id").as("sq8_id"))
-    val fp = annQueryNovelAt(spark, dir, None)
+    val fp = annQueryNovelAt(spark, dir)
       .filter(col("rank") === 1L)
       .select(col("query_id"), col("vec_id").as("fp_id"))
     novelExactTop1(spark, dir)

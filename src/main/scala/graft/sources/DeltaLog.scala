@@ -2,8 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,11 +19,11 @@ import org.apache.spark.sql.types._
   *
   * Scope (guarded loudly, never silently wrong):
   *  - reader versions 1-3 with the features this reader implements:
-  *    column mapping (name mode, reader v2) and DELETION VECTORS
-  *    (reader v3 feature — [[DeletionVectors]] decodes the bitmaps,
-  *    [[read]] anti-joins them on `_metadata.row_index`, and
-  *    [[deleteWithDv]] WRITES them, the modern Delta DELETE). Any
-  *    other declared reader feature (v2Checkpoint, typeWidening, …)
+  *    column mapping (name and id mode), DELETION VECTORS (reader v3
+  *    feature — [[DeletionVectors]] decodes the bitmaps, [[read]]
+  *    anti-joins them on `_metadata.row_index`, and [[deleteWithDv]]
+  *    WRITES them, the modern Delta DELETE), V2 checkpoints, type
+  *    widening and timestampNtz. Any other declared reader feature
   *    refuses, and the check is evaluated over BOTH the JSON commits
   *    and the checkpoint parquet (real checkpoints carry
   *    `protocol`/`metaData` rows — that is what makes the JSON prefix
@@ -35,14 +34,16 @@ import org.apache.spark.sql.types._
   *    ignored, as Delta's own reader does — the JSON log still covers
   *    them). The WRITER emits single-part checkpoints only.
   *
-  * Scale shape: the action replay runs IN SPARK — the JSON commits and
-  * the checkpoint parquet are read as DataFrames, the last-action-per-
-  * path reconciliation is one window over the FILE-CARDINALITY action
-  * relation (a 100 TB table is ~10^5-10^6 add actions — metadata-
-  * sized), and only the resolved live-file LIST is collected to the
-  * driver (the same driver-memory contract Delta's own snapshot replay
-  * has). When `_last_checkpoint` exists the current-snapshot path never
-  * LISTS the log directory at all: it reads the pointer and probes
+  * Scale shape: the action replay runs ON THE DRIVER — JSON commits
+  * are parsed with Jackson, the checkpoint parquet is collected through
+  * one Spark read, and the last-action-per-path reconciliation is plain
+  * Scala over the FILE-CARDINALITY action list (a 100 TB table is
+  * ~10^5-10^6 add actions — metadata-sized; the same driver-memory
+  * contract Delta's own snapshot replay has). Reads and both checkpoint
+  * writers share that ONE replay; a checkpoint is its rows, written by
+  * one Spark job per file. When `_last_checkpoint` exists the
+  * current-snapshot path never LISTS the log directory at all: it
+  * reads the pointer and probes
   * forward for the commits after the checkpoint, so a 10^5-commit table
   * costs one checkpoint scan + a handful of existence checks. Data
   * files are then ordinary pruned/pushdown-friendly parquet scans; for
@@ -292,17 +293,8 @@ object DeltaLog {
     val logDir = logDirOf(tablePath)
     val fs = fsOf(spark, logDir)
     if (!fs.exists(logDir) || fs.listStatus(logDir).isEmpty) None
-    else
-      actsLocal(spark, tablePath, None).iterator
-        .filter(a => a.txnApp == appId && a.txnVersion != null)
-        .map(_.txnVersion.longValue).maxOption
+    else replay(spark, tablePath, None).txns.get(appId)
   }
-
-  private def jsonActions(spark: SparkSession, paths: Seq[String]): DataFrame =
-    normalize(
-      spark.read.schema(logSchema).json(paths: _*)
-        .withColumn("version",
-          regexp_extract(input_file_name(), """(\d{20})\.json""", 1).cast(LongType)))
 
   /** Checkpoint actions — crucially, `protocol` and `metaData` are
     * PROJECTED from the checkpoint parquet, not nulled: the protocol
@@ -396,7 +388,9 @@ object DeltaLog {
     }
   }
 
-  /** The normalized actions DataFrame for a snapshot.
+  /** The concrete sources a snapshot replays: at most one checkpoint
+    * anchor plus the ordered JSON commits after it. `version` is the
+    * newest version the segment covers (-1 for an empty one).
     *
     * Current snapshot (`versionAsOf = None`): prefer the
     * `_last_checkpoint` fast path — checkpoint + forward-probed commits,
@@ -408,14 +402,10 @@ object DeltaLog {
     * commits (c, v] — so log cleanup before a checkpoint no longer
     * forbids travel to versions the checkpoint covers.
     */
-  /** The concrete sources a snapshot replays: at most one checkpoint
-    * anchor plus the ordered JSON commits after it. Extracted from the
-    * replay so the DataFrame materialization (checkpoint writers) and
-    * the driver-side one ([[actsLocal]] — the read hot path) share one
-    * source-selection policy, fast paths and refusals included.
-    */
   private final case class LogSegment(
-      checkpoint: Option[(Long, CheckpointRef)], commits: Seq[(Long, String)])
+      checkpoint: Option[(Long, CheckpointRef)], commits: Seq[(Long, String)]) {
+    def version: Long = (commits.map(_._1) ++ checkpoint.map(_._1)).maxOption.getOrElse(-1L)
+  }
 
   private def segmentFor(
       spark: SparkSession, tablePath: String, versionAsOf: Option[Long]): LogSegment = {
@@ -472,24 +462,6 @@ object DeltaLog {
                 LogSegment(None, (0L to latest).map(w => w -> log.jsons(w)))
             }
         }
-    }
-  }
-
-  private def actions(
-      spark: SparkSession, tablePath: String, versionAsOf: Option[Long]): DataFrame = {
-    val logDir = logDirOf(tablePath)
-    val seg = segmentFor(spark, tablePath, versionAsOf)
-    val cp = seg.checkpoint.map { case (c, ref) =>
-      checkpointActions(spark, c, ref, logDir) }
-    val js =
-      if (seg.commits.isEmpty) None
-      else Some(jsonActions(spark, seg.commits.map(_._2)))
-    (cp, js) match {
-      case (Some(a), Some(b)) => a.union(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case (None, None) =>
-        throw new IllegalArgumentException(s"DeltaLog: empty log segment at $tablePath")
     }
   }
 
@@ -636,15 +608,13 @@ object DeltaLog {
       version = r.getLong(26))
   }
 
-  /** The snapshot's normalized actions, driver-resident: JSON commits
+  /** A segment's normalized actions, driver-resident: JSON commits
     * Jackson-parsed straight off the filesystem (zero Spark jobs), the
     * checkpoint anchor (when one exists) collected through one parquet
-    * read. Same source selection as [[actions]] via [[segmentFor]].
+    * read.
     */
-  private def actsLocal(
-      spark: SparkSession, tablePath: String, versionAsOf: Option[Long]): Seq[Act] = {
+  private def actsLocal(spark: SparkSession, tablePath: String, seg: LogSegment): Seq[Act] = {
     val logDir = logDirOf(tablePath)
-    val seg = segmentFor(spark, tablePath, versionAsOf)
     val fs = fsOf(spark, logDir)
     val cpActs = seg.checkpoint.toSeq.flatMap { case (c, ref) =>
       checkpointActions(spark, c, ref, logDir).collect().map(actFromRow).toSeq
@@ -668,32 +638,6 @@ object DeltaLog {
       }
     }
     cpActs ++ jsonActs
-  }
-
-  /** One live/tombstone winner row per path: the LAST action per path
-    * wins (a path may be added, removed, then re-added across commits;
-    * within one commit it appears at most once).
-    */
-  private def reconcile(acts: DataFrame): DataFrame = {
-    // within one version the ADD wins the tie: a DV commit (and Delta's
-    // own DELETE) removes and re-adds the SAME path in one transaction,
-    // and the add is the surviving incarnation (checkpoints never carry
-    // both actions for one path, so the tie-break is inert there)
-    val perPath = Window.partitionBy("path")
-      .orderBy(col("version").desc, col("is_add").desc)
-    acts
-      .select(
-        coalesce(col("add_path"), col("remove_path")).as("path"),
-        col("add_path").isNotNull.as("is_add"),
-        col("add_pvals"), col("add_size"), col("add_stats"),
-        col("add_base_row_id"), col("add_default_rcv"),
-        col("remove_ts"), col("version"),
-        col("dv_storage"), col("dv_path"), col("dv_offset"),
-        col("dv_size"), col("dv_cardinality"))
-      .filter(col("path").isNotNull)
-      .withColumn("rn", row_number().over(perPath))
-      .filter(col("rn") === 1)
-      .drop("rn")
   }
 
   /** A resolved snapshot: live files (with their partition values),
@@ -788,14 +732,29 @@ object DeltaLog {
   }
 
   def snapshot(
-      spark: SparkSession, tablePath: String, versionAsOf: Option[Long] = None): Snapshot = {
-    // driver-side replay (see [[Act]]): the guard scan, metaData pick,
-    // per-path reconciliation and domain-metadata resolution are plain
-    // Scala over the metadata-sized action list — the former DataFrame
-    // form spent 1 read.json + 3 Spark jobs per snapshot on the same
-    // metadata, the fixed cost of EVERY Delta read
-    val acts = actsLocal(spark, tablePath, versionAsOf)
-    // protocol guard — sees checkpoint-carried protocol rows too
+      spark: SparkSession, tablePath: String, versionAsOf: Option[Long] = None): Snapshot =
+    readable(replay(spark, tablePath, versionAsOf)).snapshot
+
+  /** One replay of a log segment — the single log replay behind
+    * [[snapshot]], [[lastTxnVersion]] and both checkpoint writers:
+    * the segment's `version`, the resolved [[Snapshot]], the
+    * `tombstones` (path, deletionTimestamp) a checkpoint carries, and
+    * the newest `txn` version per appId.
+    */
+  private final case class Replay(
+      version: Long, snapshot: Snapshot,
+      tombstones: Seq[(String, Long)], txns: Map[String, Long])
+
+  /** Replay the segment [[segmentFor]] selects, driver-side (see
+    * [[Act]]): the protocol union, metaData pick, per-path
+    * reconciliation, domain-metadata and txn resolution are plain
+    * Scala over the metadata-sized action list.
+    */
+  private def replay(
+      spark: SparkSession, tablePath: String, versionAsOf: Option[Long]): Replay = {
+    val seg = segmentFor(spark, tablePath, versionAsOf)
+    val acts = actsLocal(spark, tablePath, seg)
+    // protocol — sees checkpoint-carried protocol rows too
     val readerVersion =
       acts.iterator.flatMap(a => Option(a.readerVersion)).map(_.intValue).maxOption
     val readerFeats: Set[String] =
@@ -804,20 +763,6 @@ object DeltaLog {
       acts.iterator.flatMap(a => Option(a.writerVersion)).map(_.intValue).maxOption
     val writerFeats: Set[String] =
       acts.iterator.flatMap(a => Option(a.writerFeatures)).flatten.toSet
-    readerVersion.foreach { rv =>
-      // v3 tables declare their reader features explicitly; this reader
-      // implements deletionVectors, columnMapping (name mode) and
-      // v2Checkpoint — any OTHER declared feature (typeWidening, ...)
-      // refuses
-      val unsupported = readerFeats --
-        Set("deletionVectors", "columnMapping", "v2Checkpoint",
-          "typeWidening", "typeWidening-preview", "timestampNtz")
-      require(rv <= 2 || (rv == 3 && unsupported.isEmpty),
-        s"DeltaLog: minReaderVersion $rv with reader features " +
-          s"[${readerFeats.mkString(",")}] requires " +
-          s"[${unsupported.mkString(",")}] this reader does not implement " +
-          "(supported: column mapping, deletion vectors, v2 checkpoints, type widening)")
-    }
     // latest metaData wins (schema evolution replaces the action)
     val metaRow = acts
       .filter(a => a.partitionCols != null || a.schemaString != null) match {
@@ -832,38 +777,38 @@ object DeltaLog {
         Option(a.metaConf).getOrElse(Map.empty[String, String]))
       case None => (None, None, Seq.empty[String], Map.empty[String, String])
     }
-    // one live/tombstone winner per path: the LAST action wins, and
-    // within one version the ADD wins the tie (a DV commit removes and
-    // re-adds the same path in one transaction) — the same rule as the
-    // DataFrame [[reconcile]] the checkpoint writers replay
-    val live = acts.iterator
+    // one live/tombstone winner per path: the LAST action wins (a path
+    // may be added, removed, then re-added across commits), and within
+    // one version the ADD wins the tie — a DV commit (and Delta's own
+    // DELETE) removes and re-adds the SAME path in one transaction, and
+    // the add is the surviving incarnation
+    val (adds, removes) = acts
       .filter(a => a.addPath != null || a.removePath != null)
-      .map(a => (if (a.addPath != null) a.addPath else a.removePath, a))
-      .toSeq
-      .groupBy(_._1)
-      .flatMap { case (path, pairs) =>
-        val winner = pairs.map(_._2)
-          .maxBy(a => (a.version, if (a.addPath != null) 1 else 0))
-        if (winner.addPath == null) None
-        else {
-          val dv = Option(winner.dvStorage).map { st =>
-            DeletionVectors.Descriptor(
-              st,
-              winner.dvPath,
-              Option(winner.dvOffset).map(_.intValue),
-              winner.dvSize.intValue,
-              Option(winner.dvCardinality).map(_.longValue).getOrElse(0L))
-          }
-          Some(DeltaFile(
-            path,
-            Option(winner.addPvals).getOrElse(Map.empty),
-            Option(winner.addSize).map(_.longValue).getOrElse(0L),
-            dv,
-            Option(winner.addStats),
-            Option(winner.addBaseRowId).map(_.longValue),
-            Option(winner.addDefaultRcv).map(_.longValue)))
-        }
-      }.toSeq.sortBy(_.path)
+      .groupBy(a => if (a.addPath != null) a.addPath else a.removePath)
+      .map { case (path, as) =>
+        path -> as.maxBy(a => (a.version, if (a.addPath != null) 1 else 0)) }
+      .toSeq.sortBy(_._1)
+      .partition(_._2.addPath != null)
+    val live = adds.map { case (path, winner) =>
+      val dv = Option(winner.dvStorage).map { st =>
+        DeletionVectors.Descriptor(
+          st,
+          winner.dvPath,
+          Option(winner.dvOffset).map(_.intValue),
+          winner.dvSize.intValue,
+          Option(winner.dvCardinality).map(_.longValue).getOrElse(0L))
+      }
+      DeltaFile(
+        path,
+        Option(winner.addPvals).getOrElse(Map.empty),
+        Option(winner.addSize).map(_.longValue).getOrElse(0L),
+        dv,
+        Option(winner.addStats),
+        Option(winner.addBaseRowId).map(_.longValue),
+        Option(winner.addDefaultRcv).map(_.longValue))
+    }
+    val tombstones = removes.map { case (path, winner) =>
+      path -> Option(winner.removeTs).map(_.longValue).getOrElse(0L) }
     // domain metadata: latest action per domain wins (the protocol's
     // reconciliation rule), a removed=true winner drops the domain
     val domains: Map[String, String] = acts
@@ -875,8 +820,32 @@ object DeltaLog {
         if (removed) None
         else Some(domain -> Option(latest.dmConf).getOrElse(""))
       }
-    Snapshot(live, metaId, schemaStr, pcols, conf, readerVersion, readerFeats,
-      writerVersion, writerFeats, domains)
+    val txns = acts
+      .filter(a => a.txnApp != null && a.txnVersion != null)
+      .groupMapReduce(_.txnApp)(_.txnVersion.longValue)(math.max)
+    Replay(seg.version,
+      Snapshot(live, metaId, schemaStr, pcols, conf, readerVersion, readerFeats,
+        writerVersion, writerFeats, domains),
+      tombstones, txns)
+  }
+
+  /** The reader-feature guard every snapshot consumer passes through:
+    * v3 tables declare their reader features explicitly, and any this
+    * reader does not implement refuses.
+    */
+  private def readable(rep: Replay): Replay = {
+    val snap = rep.snapshot
+    snap.readerVersion.foreach { rv =>
+      val unsupported = snap.readerFeatures --
+        Set("deletionVectors", "columnMapping", "v2Checkpoint",
+          "typeWidening", "typeWidening-preview", "timestampNtz")
+      require(rv <= 2 || (rv == 3 && unsupported.isEmpty),
+        s"DeltaLog: minReaderVersion $rv with reader features " +
+          s"[${snap.readerFeatures.mkString(",")}] requires " +
+          s"[${unsupported.mkString(",")}] this reader does not implement " +
+          "(supported: column mapping, deletion vectors, v2 checkpoints, type widening)")
+    }
+    rep
   }
 
   /** Protocol paths are percent-encoded relative URIs (or absolute
@@ -1441,157 +1410,144 @@ object DeltaLog {
     try out.write(bytes) finally out.close()
   }
 
-  /** Write a classic single-part checkpoint of the CURRENT snapshot and
-    * point `_last_checkpoint` at it: live `add` rows (with partition
-    * values and real sizes), tombstone `remove` rows, plus the
-    * `protocol` and `metaData` actions the spec requires every
-    * checkpoint to carry — so guards still fire after the JSON prefix
-    * is cleaned up. Returns the checkpointed version.
+  /** Every checkpoint column, in file order: a classic checkpoint
+    * carries the first [[ClassicWidth]], a V2 checkpoint all of them,
+    * and a V2 sidecar the first [[SidecarWidth]] (the file actions).
     */
-  /** The (add, remove) checkpoint rows for a snapshot's reconciled
-    * winners — shared by the classic and V2 writers (V2 lands them in
-    * a SIDECAR parquet instead of the checkpoint file itself). Live
-    * deletion vectors survive — dropping the descriptor would
-    * RESURRECT every DV-deleted row after cleanup.
+  private val checkpointSchema: StructType = StructType(Seq(
+    StructField("add", StructType(Seq(
+      StructField("path", StringType),
+      StructField("partitionValues", MapType(StringType, StringType)),
+      StructField("size", LongType),
+      StructField("modificationTime", LongType),
+      StructField("dataChange", BooleanType),
+      StructField("stats", StringType),
+      StructField("baseRowId", LongType),
+      StructField("defaultRowCommitVersion", LongType),
+      StructField("deletionVector", StructType(Seq(
+        StructField("storageType", StringType),
+        StructField("pathOrInlineDv", StringType),
+        StructField("offset", IntegerType),
+        StructField("sizeInBytes", IntegerType),
+        StructField("cardinality", LongType))))))),
+    StructField("remove", StructType(Seq(
+      StructField("path", StringType),
+      StructField("deletionTimestamp", LongType),
+      StructField("dataChange", BooleanType)))),
+    StructField("protocol", StructType(Seq(
+      StructField("minReaderVersion", IntegerType),
+      StructField("minWriterVersion", IntegerType),
+      StructField("readerFeatures", ArrayType(StringType)),
+      StructField("writerFeatures", ArrayType(StringType))))),
+    StructField("metaData", StructType(Seq(
+      StructField("id", StringType),
+      StructField("format", StructType(Seq(
+        StructField("provider", StringType),
+        StructField("options", MapType(StringType, StringType))))),
+      StructField("schemaString", StringType),
+      StructField("partitionColumns", ArrayType(StringType)),
+      StructField("configuration", MapType(StringType, StringType))))),
+    StructField("txn", StructType(Seq(
+      StructField("appId", StringType),
+      StructField("version", LongType)))),
+    StructField("domainMetadata", StructType(Seq(
+      StructField("domain", StringType),
+      StructField("configuration", StringType),
+      StructField("removed", BooleanType)))),
+    StructField("checkpointMetadata", StructType(Seq(
+      StructField("version", LongType),
+      StructField("tags", MapType(StringType, StringType))))),
+    StructField("sidecar", StructType(Seq(
+      StructField("path", StringType),
+      StructField("sizeInBytes", LongType),
+      StructField("modificationTime", LongType),
+      StructField("tags", MapType(StringType, StringType)))))))
+  private val ClassicWidth = 6
+  private val SidecarWidth = 2
+
+  /** One [[checkpointSchema]] row: the named actions set, every other
+    * column null.
     */
-  private def fileActionRows(winners: DataFrame): DataFrame =
-    winners.select(
-      when(col("is_add"), struct(
-        col("path"),
-        coalesce(col("add_pvals"),
-          lit(null).cast(MapType(StringType, StringType))).as("partitionValues"),
-        coalesce(col("add_size"), lit(0L)).as("size"),
-        lit(0L).as("modificationTime"),
-        lit(true).as("dataChange"),
-        col("add_stats").as("stats"),
-        // rowTracking identities survive checkpointing — dropping them
-        // here would strand readWithRowIds after JSON-prefix cleanup
-        col("add_base_row_id").as("baseRowId"),
-        col("add_default_rcv").as("defaultRowCommitVersion"),
-        when(col("dv_storage").isNotNull, struct(
-          col("dv_storage").as("storageType"),
-          col("dv_path").as("pathOrInlineDv"),
-          col("dv_offset").as("offset"),
-          col("dv_size").as("sizeInBytes"),
-          col("dv_cardinality").as("cardinality"))).as("deletionVector"))).as("add"),
-      when(!col("is_add"), struct(
-        col("path"),
-        coalesce(col("remove_ts"), lit(0L)).as("deletionTimestamp"),
-        lit(true).as("dataChange"))).as("remove"))
+  private def cpRow(actions: (String, Row)*): Row = {
+    val set = actions.toMap
+    Row.fromSeq(checkpointSchema.fields.toSeq.map(f => set.getOrElse(f.name, null)))
+  }
 
-  /** Checkpoint shape of a `domainMetadata` action. */
-  private val dmType: StructType = StructType(Seq(
-    StructField("domain", StringType),
-    StructField("configuration", StringType),
-    StructField("removed", BooleanType)))
-
-  /** The live domain-metadata rows a checkpoint must retain (spec:
-    * dropping them would e.g. lose the row-tracking high-water mark
-    * after JSON-prefix cleanup and make the next append re-allocate
-    * already-burned row ids). Null action columns mirror `shape`.
+  /** A replay as [[checkpointSchema]] rows, shared by both writers:
+    * (the head row — `protocol`, `metaData` and any `head` extras —
+    * then the newest `txn` per appId and the live `domainMetadata`;
+    * the file actions — live `add`s, then tombstone `remove`s).
+    *
+    * What must survive JSON-prefix cleanup rides here: the protocol
+    * row mirrors the TABLE's protocol (a DV'd table checkpoints as
+    * (3, 7) with its feature sets, not the writer's own floor); the
+    * metaData carries format + configuration (a real Delta reader
+    * rebuilding the snapshot needs both); the txns keep
+    * [[lastTxnVersion]] exactly-once; the domains keep the
+    * row-tracking high-water mark (losing it would re-allocate burned
+    * row ids); live deletion vectors (dropping one RESURRECTS every
+    * DV-deleted row) and row-tracking identities ride on the adds.
     */
-  private def domainMetadataRows(
-      spark: SparkSession, snap: Snapshot, shape: StructType): Option[DataFrame] =
-    if (snap.domainMetadata.isEmpty) None
-    else Some {
-      val rows = snap.domainMetadata.toSeq.sorted.map { case (d, c) =>
-        org.apache.spark.sql.Row.fromSeq(shape.fields.toSeq.map { f =>
-          if (f.name == "domainMetadata") org.apache.spark.sql.Row(d, c, false)
-          else null
-        })
-      }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), shape)
-    }
+  private def checkpointRows(
+      rep: Replay, head: (String, Row)*): (Seq[Row], Seq[Row]) = {
+    val snap = rep.snapshot
+    val reader = snap.readerVersion.getOrElse(1)
+    def feats(s: Set[String]): Seq[String] = if (s.isEmpty) null else s.toSeq.sorted
+    val protocol = Row(reader, snap.writerVersion.getOrElse(if (reader >= 3) 7 else 2),
+      feats(snap.readerFeatures), feats(snap.writerFeatures))
+    val metaData = Row(snap.metaId.getOrElse("graft"), Row("parquet", Map.empty[String, String]),
+      snap.schemaString.getOrElse(""), snap.partitionColumns, snap.configuration)
+    val meta = cpRow(Seq("protocol" -> protocol, "metaData" -> metaData) ++ head: _*) +:
+      (rep.txns.toSeq.sorted.map { case (app, v) => cpRow("txn" -> Row(app, v)) } ++
+        snap.domainMetadata.toSeq.sorted.map { case (d, c) =>
+          cpRow("domainMetadata" -> Row(d, c, false)) })
+    val files = snap.files.map { f =>
+      val dv = f.dv.map(d => Row(d.storageType, d.pathOrInlineDv, d.offset.getOrElse(null),
+        d.sizeInBytes, d.cardinality)).orNull
+      cpRow("add" -> Row(f.path, f.partitionValues, f.size, 0L, true, f.stats.orNull,
+        f.baseRowId.getOrElse(null), f.defaultRowCommitVersion.getOrElse(null), dv))
+    } ++ rep.tombstones.map { case (path, ts) => cpRow("remove" -> Row(path, ts, true)) }
+    (meta, files)
+  }
 
-  def writeCheckpoint(spark: SparkSession, tablePath: String): Long = {
-    val logDir = logDirOf(tablePath)
-    val fs = fsOf(spark, logDir)
-    // a table that has adopted the v2Checkpoint feature must not write
-    // classic checkpoints (spec) — delegate
-    if (snapshot(spark, tablePath, None).readerFeatures.contains("v2Checkpoint"))
-      return writeCheckpointV2(spark, tablePath)
-    val log = listLog(spark, tablePath)
-    val latest = (log.jsons.keySet ++ log.checkpoints.keySet).max
-    val acts = actions(spark, tablePath, None)
-    val winners = reconcile(acts)
-    val snap = snapshot(spark, tablePath, None)
-    val actionRows = fileActionRows(winners)
-      .withColumn("protocol", lit(null).cast(StructType(Seq(
-        StructField("minReaderVersion", IntegerType),
-        StructField("minWriterVersion", IntegerType),
-        StructField("readerFeatures", ArrayType(StringType)),
-        StructField("writerFeatures", ArrayType(StringType))))))
-      .withColumn("metaData", lit(null).cast(StructType(Seq(
-        StructField("id", StringType),
-        StructField("format", StructType(Seq(
-          StructField("provider", StringType),
-          StructField("options", MapType(StringType, StringType))))),
-        StructField("schemaString", StringType),
-        StructField("partitionColumns", ArrayType(StringType)),
-        StructField("configuration", MapType(StringType, StringType))))))
-      .withColumn("txn", lit(null).cast(StructType(Seq(
-        StructField("appId", StringType),
-        StructField("version", LongType)))))
-      .withColumn("domainMetadata", lit(null).cast(dmType))
-    // the checkpoint's protocol row mirrors the TABLE's protocol — a
-    // DV'd table checkpoints as (3, 7) with its feature sets, not the
-    // writer's own floor
-    val cpReader = snap.readerVersion.getOrElse(1)
-    val cpWriter = snap.writerVersion.getOrElse(if (cpReader >= 3) 7 else 2)
-    def featArray(s: Set[String]): Column =
-      if (s.isEmpty) lit(null).cast(ArrayType(StringType))
-      else array(s.toSeq.sorted.map(lit): _*)
-    val headRow = spark.range(1).select(
-      lit(null).cast(actionRows.schema("add").dataType).as("add"),
-      lit(null).cast(actionRows.schema("remove").dataType).as("remove"),
-      struct(
-        lit(cpReader).as("minReaderVersion"), lit(cpWriter).as("minWriterVersion"),
-        featArray(snap.readerFeatures).as("readerFeatures"),
-        featArray(snap.writerFeatures).as("writerFeatures")).as("protocol"),
-      struct(
-        lit(snap.metaId.getOrElse("graft")).as("id"),
-        // the spec's metaData carries format + configuration — a real
-        // Delta reader rebuilding the snapshot from this checkpoint
-        // (after JSON cleanup) needs both, same as the append path
-        struct(
-          lit("parquet").as("provider"),
-          typedLit(Map.empty[String, String]).as("options")).as("format"),
-        lit(snap.schemaString.getOrElse("")).as("schemaString"),
-        snap.partitionColumns match {
-          case Seq() => array().cast(ArrayType(StringType)).as("partitionColumns")
-          case ps => array(ps.map(lit): _*).as("partitionColumns")
-        },
-        typedLit(snap.configuration).as("configuration")).as("metaData"),
-      lit(null).cast(actionRows.schema("txn").dataType).as("txn"),
-      lit(null).cast(dmType).as("domainMetadata"))
-    // the spec requires checkpoints to retain the NEWEST txn per appId
-    // — dropping them here would silently break the exactly-once
-    // contract of [[lastTxnVersion]] after log cleanup
-    val txnRows = acts.filter(col("txn_app").isNotNull)
-      .groupBy(col("txn_app")).agg(max(col("txn_version")).as("v"))
-      .select(
-        lit(null).cast(actionRows.schema("add").dataType).as("add"),
-        lit(null).cast(actionRows.schema("remove").dataType).as("remove"),
-        lit(null).cast(actionRows.schema("protocol").dataType).as("protocol"),
-        lit(null).cast(actionRows.schema("metaData").dataType).as("metaData"),
-        struct(col("txn_app").as("appId"), col("v").as("version")).as("txn"),
-        lit(null).cast(dmType).as("domainMetadata"))
-    val cpBase = headRow.unionByName(actionRows).unionByName(txnRows)
-    val cpDf = domainMetadataRows(spark, snap, cpBase.schema)
-      .fold(cpBase)(cpBase.unionByName(_))
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new Path(tablePath, s"_cp_stage_$stamp")
-    cpDf.coalesce(1).write.parquet(stage.toString)
+  /** Land the first `width` columns of `rows` as ONE parquet file at
+    * `target`: one Spark write job into a stage dir beside the table,
+    * then a move into the log.
+    */
+  private def writeCheckpointFile(
+      spark: SparkSession, tablePath: String, rows: Seq[Row], width: Int, target: Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    val fs = fsOf(spark, target)
+    val stage = new Path(tablePath, s"_cp_stage_${java.util.UUID.randomUUID().toString.take(8)}")
+    spark.createDataFrame(rows.map(r => Row.fromSeq(r.toSeq.take(width))).asJava,
+        StructType(checkpointSchema.fields.toSeq.take(width)))
+      .coalesce(1).write.parquet(stage.toString)
     val part = fs.globStatus(new Path(stage, "part-*.parquet"))(0).getPath
-    val target = checkpointPath(logDir, latest)
     fs.delete(target, false)
     require(fs.rename(part, target), s"DeltaLog: checkpoint move failed for $part")
     fs.delete(stage, true)
-    val n = cpDf.count()
-    writeAtomic(fs, new Path(logDir, "_last_checkpoint"),
-      s"""{"version":$latest,"size":$n}""".getBytes("UTF-8"), overwrite = true)
-    latest
+  }
+
+  /** Write a classic single-part checkpoint of the CURRENT snapshot and
+    * point `_last_checkpoint` at it: the [[checkpointRows]] of ONE
+    * [[replay]], built driver-side and written by one Spark job. The
+    * checkpoint's version is the replayed segment's, so a commit
+    * landing meanwhile can never leak into it. Returns the
+    * checkpointed version.
+    */
+  def writeCheckpoint(spark: SparkSession, tablePath: String): Long = {
+    val rep = readable(replay(spark, tablePath, None))
+    // a table that has adopted the v2Checkpoint feature must not write
+    // classic checkpoints (spec) — delegate
+    if (rep.snapshot.readerFeatures.contains("v2Checkpoint"))
+      return checkpointV2(spark, tablePath, rep)
+    val logDir = logDirOf(tablePath)
+    val (meta, files) = checkpointRows(rep)
+    val rows = meta ++ files
+    writeCheckpointFile(spark, tablePath, rows, ClassicWidth, checkpointPath(logDir, rep.version))
+    writeAtomic(fsOf(spark, logDir), new Path(logDir, "_last_checkpoint"),
+      s"""{"version":${rep.version},"size":${rows.size}}""".getBytes("UTF-8"), overwrite = true)
+    rep.version
   }
 
   /** Write a V2 (UUID-named) checkpoint — the `v2Checkpoint` table
@@ -1599,7 +1555,8 @@ object DeltaLog {
     * `_delta_log/_sidecars/`, and the checkpoint file
     * `%020d.checkpoint.<uuid>.parquet` carries the spec-required
     * `checkpointMetadata` self-identification, the `sidecar` pointer
-    * rows, `protocol` + `metaData`, and the newest `txn` per appId.
+    * row, `protocol` + `metaData`, the newest `txn` per appId and the
+    * live domain metadata.
     * A table not yet declaring the feature gets a protocol-upgrade
     * COMMIT first (readerVersion 3 / writerVersion 7 + v2Checkpoint,
     * legacy implied features re-declared) — checkpoints themselves
@@ -1608,133 +1565,50 @@ object DeltaLog {
     * so the no-listing fast path survives. Returns the checkpointed
     * version (which is the upgrade commit's when one was needed).
     *
-    * Scale shape: identical to the classic writer — the sidecar is the
-    * same file-cardinality relation, written distributed and moved
-    * once; splitting actions across MANY sidecars (what Delta does at
-    * 10^6-file scale) would only change the coalesce(1).
+    * Splitting actions across MANY sidecars (what Delta does at
+    * 10^6-file scale) would only split the sidecar rows.
     */
-  def writeCheckpointV2(spark: SparkSession, tablePath: String): Long = {
+  def writeCheckpointV2(spark: SparkSession, tablePath: String): Long =
+    checkpointV2(spark, tablePath, readable(replay(spark, tablePath, None)))
+
+  private def checkpointV2(spark: SparkSession, tablePath: String, current: Replay): Long = {
     val logDir = logDirOf(tablePath)
     val fs = fsOf(spark, logDir)
-    val snap0 = snapshot(spark, tablePath, None)
-    if (!(snap0.readerVersion.exists(_ >= 3) && snap0.readerFeatures.contains("v2Checkpoint"))) {
-      val rf = (snap0.readerFeatures + "v2Checkpoint" ++
-        snap0.readerVersion.toSet.flatMap(legacyImpliedReaderFeatures) ++
-        (if (snap0.columnMappingMode != "none") Set("columnMapping") else Set.empty)).toSeq.sorted
-      val wf = (snap0.writerFeatures ++
-        snap0.writerVersion.toSet.flatMap(legacyImpliedWriterFeatures) ++
-        Set("appendOnly", "invariants", "v2Checkpoint")).toSeq.sorted
-      val line = actionLineStatic { root =>
-        val p = root.putObject("protocol")
-        p.put("minReaderVersion", 3); p.put("minWriterVersion", 7)
-        val rfa = p.putArray("readerFeatures"); rf.foreach(rfa.add)
-        val wfa = p.putArray("writerFeatures"); wf.foreach(wfa.add)
+    val snap0 = current.snapshot
+    val rep =
+      if (snap0.readerVersion.exists(_ >= 3) && snap0.readerFeatures.contains("v2Checkpoint"))
+        current
+      else {
+        val rf = (snap0.readerFeatures + "v2Checkpoint" ++
+          snap0.readerVersion.toSet.flatMap(legacyImpliedReaderFeatures) ++
+          (if (snap0.columnMappingMode != "none") Set("columnMapping") else Set.empty)).toSeq.sorted
+        val wf = (snap0.writerFeatures ++
+          snap0.writerVersion.toSet.flatMap(legacyImpliedWriterFeatures) ++
+          Set("appendOnly", "invariants", "v2Checkpoint")).toSeq.sorted
+        val line = actionLineStatic { root =>
+          val p = root.putObject("protocol")
+          p.put("minReaderVersion", 3); p.put("minWriterVersion", 7)
+          val rfa = p.putArray("readerFeatures"); rf.foreach(rfa.add)
+          val wfa = p.putArray("writerFeatures"); wf.foreach(wfa.add)
+        }
+        commitActions(fs, logDir, tablePath, _ => Seq(line))
+        readable(replay(spark, tablePath, None))
       }
-      commitActions(fs, logDir, tablePath, _ => Seq(line))
-    }
-    val log = listLog(spark, tablePath)
-    val latest = (log.jsons.keySet ++ log.checkpoints.keySet).max
-    val acts = actions(spark, tablePath, None)
-    val winners = reconcile(acts)
-    val snap = snapshot(spark, tablePath, None)
     val uuid = java.util.UUID.randomUUID().toString
-    // --- sidecar: the file actions, one parquet under _sidecars/
-    val fileRows = fileActionRows(winners)
-    val sidecarDir = new Path(logDir, "_sidecars")
-    fs.mkdirs(sidecarDir)
-    val stage = new Path(tablePath, s"_cp_stage_${uuid.take(8)}")
-    fileRows.coalesce(1).write.parquet(stage.toString)
-    val part = fs.globStatus(new Path(stage, "part-*.parquet"))(0).getPath
+    val (meta, files) = checkpointRows(rep, "checkpointMetadata" -> Row(rep.version, null))
     val sidecarName = s"$uuid.parquet"
-    val sidecarPath = new Path(sidecarDir, sidecarName)
-    require(fs.rename(part, sidecarPath), s"DeltaLog: sidecar move failed for $part")
-    fs.delete(stage, true)
+    val sidecarPath = new Path(new Path(logDir, "_sidecars"), sidecarName)
+    fs.mkdirs(sidecarPath.getParent)
+    writeCheckpointFile(spark, tablePath, files, SidecarWidth, sidecarPath)
     val sidecarStat = fs.getFileStatus(sidecarPath)
-    // --- checkpoint file: protocol + metaData + txn + checkpointMetadata + sidecar
-    val addT = fileRows.schema("add").dataType
-    val removeT = fileRows.schema("remove").dataType
-    val protocolT = StructType(Seq(
-      StructField("minReaderVersion", IntegerType),
-      StructField("minWriterVersion", IntegerType),
-      StructField("readerFeatures", ArrayType(StringType)),
-      StructField("writerFeatures", ArrayType(StringType))))
-    val metaT = StructType(Seq(
-      StructField("id", StringType),
-      StructField("format", StructType(Seq(
-        StructField("provider", StringType),
-        StructField("options", MapType(StringType, StringType))))),
-      StructField("schemaString", StringType),
-      StructField("partitionColumns", ArrayType(StringType)),
-      StructField("configuration", MapType(StringType, StringType))))
-    val txnT = StructType(Seq(
-      StructField("appId", StringType), StructField("version", LongType)))
-    val cpMetaT = StructType(Seq(
-      StructField("version", LongType),
-      StructField("tags", MapType(StringType, StringType))))
-    val sidecarT = StructType(Seq(
-      StructField("path", StringType),
-      StructField("sizeInBytes", LongType),
-      StructField("modificationTime", LongType),
-      StructField("tags", MapType(StringType, StringType))))
-    def nulls(except: String*): Seq[Column] = {
-      val all = Seq(
-        "add" -> addT, "remove" -> removeT, "protocol" -> protocolT,
-        "metaData" -> metaT, "txn" -> txnT, "domainMetadata" -> dmType,
-        "checkpointMetadata" -> cpMetaT, "sidecar" -> sidecarT)
-      all.filterNot(kv => except.contains(kv._1))
-        .map { case (nm, t) => lit(null).cast(t).as(nm) }
-    }
-    def featArray(s: Set[String]): Column =
-      if (s.isEmpty) lit(null).cast(ArrayType(StringType))
-      else array(s.toSeq.sorted.map(lit): _*)
-    val headRow = spark.range(1).select(
-      (nulls("protocol", "metaData", "checkpointMetadata") ++ Seq(
-        struct(
-          lit(snap.readerVersion.getOrElse(3)).as("minReaderVersion"),
-          lit(snap.writerVersion.getOrElse(7)).as("minWriterVersion"),
-          featArray(snap.readerFeatures).as("readerFeatures"),
-          featArray(snap.writerFeatures).as("writerFeatures")).as("protocol"),
-        struct(
-          lit(snap.metaId.getOrElse("graft")).as("id"),
-          struct(
-            lit("parquet").as("provider"),
-            typedLit(Map.empty[String, String]).as("options")).as("format"),
-          lit(snap.schemaString.getOrElse("")).as("schemaString"),
-          snap.partitionColumns match {
-            case Seq() => array().cast(ArrayType(StringType)).as("partitionColumns")
-            case ps => array(ps.map(lit): _*).as("partitionColumns")
-          },
-          typedLit(snap.configuration).as("configuration")).as("metaData"),
-        struct(
-          lit(latest).as("version"),
-          lit(null).cast(MapType(StringType, StringType)).as("tags")).as("checkpointMetadata"))): _*)
-    val sidecarRow = spark.range(1).select(
-      (nulls("sidecar") :+ struct(
-        lit(sidecarName).as("path"),
-        lit(sidecarStat.getLen).as("sizeInBytes"),
-        lit(sidecarStat.getModificationTime).as("modificationTime"),
-        lit(null).cast(MapType(StringType, StringType)).as("tags")).as("sidecar")): _*)
-    val txnRows = acts.filter(col("txn_app").isNotNull)
-      .groupBy(col("txn_app")).agg(max(col("txn_version")).as("v"))
-      .select((nulls("txn") :+
-        struct(col("txn_app").as("appId"), col("v").as("version")).as("txn")): _*)
-    val order = Seq("add", "remove", "protocol", "metaData", "txn",
-      "domainMetadata", "checkpointMetadata", "sidecar").map(col)
-    val cpBase = headRow.select(order: _*)
-      .unionByName(sidecarRow.select(order: _*))
-      .unionByName(txnRows.select(order: _*))
-    val cpDf = domainMetadataRows(spark, snap, cpBase.schema)
-      .fold(cpBase)(cpBase.unionByName(_))
-    val stage2 = new Path(tablePath, s"_cp_stage_${uuid.take(8)}b")
-    cpDf.coalesce(1).write.parquet(stage2.toString)
-    val part2 = fs.globStatus(new Path(stage2, "part-*.parquet"))(0).getPath
-    val target = new Path(logDir, f"$latest%020d.checkpoint.$uuid.parquet")
-    require(fs.rename(part2, target), s"DeltaLog: checkpoint move failed for $part2")
-    fs.delete(stage2, true)
-    val n = cpDf.count() + fileRows.count()
+    val rows = meta :+ cpRow("sidecar" -> Row(sidecarName, sidecarStat.getLen,
+      sidecarStat.getModificationTime, null))
+    writeCheckpointFile(spark, tablePath, rows, checkpointSchema.size,
+      new Path(logDir, f"${rep.version}%020d.checkpoint.$uuid.parquet"))
     writeAtomic(fs, new Path(logDir, "_last_checkpoint"),
-      s"""{"version":$latest,"size":$n}""".getBytes("UTF-8"), overwrite = true)
-    latest
+      s"""{"version":${rep.version},"size":${rows.size + files.size}}""".getBytes("UTF-8"),
+      overwrite = true)
+    rep.version
   }
 
   /** APPEND-ONLY writer twin: land `df` as one new protocol commit.
@@ -3621,7 +3495,7 @@ object DeltaLog {
     // emit NO action for it and silently leave the post-target deletes
     // applied (r13 advice). With (path, dv) keys the DV swap restores
     // as a remove+add pair re-carrying the target's descriptor (the
-    // within-version add-wins tie-break in [[reconcile]] makes that
+    // within-version add-wins tie-break in [[replay]] makes that
     // pair the canonical DV-change commit shape).
     def fkey(f: DeltaFile): (String, Option[DeletionVectors.Descriptor]) = (f.path, f.dv)
     val currentKeys = current.files.map(fkey).toSet
@@ -3874,12 +3748,6 @@ object DeltaLog {
     }
   }
 
-  /** Land one commit at the next free version with the put-if-absent
-    * race loop shared by [[append]], [[compact]] and any future
-    * transaction writer. `lines(v)` builds the action lines for the
-    * version actually being attempted (version 0 carries protocol +
-    * metaData).
-    */
   /** `delta.enableInCommitTimestamps = true` — every commit carries a
     * MONOTONIC `commitInfo.inCommitTimestamp` as its first action, and
     * timestamp travel resolves against it instead of file modification
@@ -3907,6 +3775,12 @@ object DeltaLog {
       }
     }
 
+  /** Land one commit at the next free version with the put-if-absent
+    * race loop shared by [[append]], [[compact]] and any future
+    * transaction writer. `lines(v)` builds the action lines for the
+    * version actually being attempted (version 0 carries protocol +
+    * metaData).
+    */
   private def commitActions(
       fs: FileSystem, logDir: Path, tablePath: String,
       lines: Long => Seq[String], withIct: Boolean = false): Long = {

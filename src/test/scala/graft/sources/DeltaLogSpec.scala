@@ -1847,25 +1847,99 @@ class DeltaLogSpec extends SparkSpec {
     assert(eF.getMessage.contains("rowTracking"), eF.getMessage)
   }
 
-  test("row tracking identities survive a classic checkpoint") {
+  // the table declares v2Checkpoint up front for the V2 writer, so
+  // neither writer commits a protocol change the snapshot would show
+  for ((kind, write, v2) <- Seq(
+      ("classic", DeltaLog.writeCheckpoint _, false),
+      ("V2", DeltaLog.writeCheckpointV2 _, true))) {
+    test(s"row tracking identities survive a $kind checkpoint") {
+      val t = newTable()
+      dataFile(t, "a.parquet", "a", 2)
+      dataFile(t, "b.parquet", "b", 3)
+      dataFile(t, "c.parquet", "c", 1)
+      val meta = """{"metaData":{"id":"t","format":{"provider":"parquet"},"schemaString":"{\"type\":\"struct\",\"fields\":[{\"name\":\"tag\",\"type\":\"string\",\"nullable\":true,\"metadata\":{}},{\"name\":\"i\",\"type\":\"long\",\"nullable\":true,\"metadata\":{}}]}","partitionColumns":[]}}"""
+      val (rf, wf) = if (v2) (""","v2Checkpoint"""", ""","v2Checkpoint"""") else ("", "")
+      commit(t, 0, Seq(
+        s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"$rf],"writerFeatures":["rowTracking","deletionVectors","appendOnly","invariants","domainMetadata"$wf]}}""",
+        meta,
+        """{"add":{"path":"a.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true,"stats":"{\"numRecords\":2}","baseRowId":10,"defaultRowCommitVersion":0}}""",
+        """{"add":{"path":"b.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true,"baseRowId":12,"defaultRowCommitVersion":0}}""",
+        """{"add":{"path":"c.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true,"baseRowId":15,"defaultRowCommitVersion":0}}""",
+        """{"domainMetadata":{"domain":"delta.rowTracking","configuration":"{\"rowIdHighWaterMark\":15}","removed":false}}""",
+        """{"txn":{"appId":"app-a","version":3}}"""))
+      // a tombstone, and a newer txn for app-a
+      commit(t, 1, Seq(
+        """{"remove":{"path":"c.parquet","deletionTimestamp":5,"dataChange":true}}""",
+        """{"txn":{"appId":"app-a","version":5}}"""))
+      // a live DV on a.parquet's first row, and a second app
+      val data = DeletionVectors.serialize(Array(0L))
+      val inline = DeletionVectors.z85Encode(java.util.Arrays.copyOf(data, (data.length + 3) / 4 * 4))
+      commit(t, 2, Seq(
+        """{"remove":{"path":"a.parquet","deletionTimestamp":6,"dataChange":true}}""",
+        s"""{"add":{"path":"a.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true,"stats":"{\\"numRecords\\":2}","baseRowId":10,"defaultRowCommitVersion":0,"deletionVector":{"storageType":"i","pathOrInlineDv":"$inline","sizeInBytes":${data.length},"cardinality":1}}}""",
+        """{"txn":{"appId":"app-b","version":7}}"""))
+      def rows = DeltaLog.readWithRowIds(spark, t).orderBy("row_id").collect()
+        .map(r => (r.getAs[Long]("row_id"), r.getAs[Long]("row_commit_version"))).toSeq
+      val expected = Seq((11L, 0L), (12L, 0L), (13L, 0L), (14L, 0L))
+      assert(rows == expected)
+      val before = DeltaLog.snapshot(spark, t)
+      assert(before.dvCardinality == 1L && before.rowIdHighWaterMark.contains(15L))
+      assert(before.files.map(_.path) == Seq("a.parquet", "b.parquet"))
+      // checkpoint, then delete the JSON prefix: the replay is now
+      // checkpoint-sourced and must resolve to the same snapshot
+      val cv = write(spark, t)
+      assert(cv == 2L)
+      val fileActions =
+        if (v2) s"$t/_delta_log/_sidecars" else s"$t/_delta_log/" + f"$cv%020d.checkpoint.parquet"
+      val tombstones = spark.read.parquet(fileActions).filter(col("remove").isNotNull)
+        .select("remove.path", "remove.deletionTimestamp").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+      assert(tombstones == Seq(("c.parquet", 5L)))
+      (0L to cv).foreach(v => Files.delete(Paths.get(s"$t/_delta_log/" + f"$v%020d.json")))
+      val after = DeltaLog.snapshot(spark, t)
+      assert(after.files == before.files, "files with dv, stats and row-tracking identities")
+      assert(after == before)
+      assert(DeltaLog.lastTxnVersion(spark, t, "app-a").contains(5L))
+      assert(DeltaLog.lastTxnVersion(spark, t, "app-b").contains(7L))
+      assert(rows == expected, "baseRowId/defaultRowCommitVersion must survive checkpointing")
+    }
+  }
+
+  test("checkpoint writers replay the log once, on the driver: one job per file written") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def jobsDuring(body: => Unit): Int = {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      org.apache.spark.TestBus.drain(sc)
+      sc.addSparkListener(l)
+      try { body; org.apache.spark.TestBus.drain(sc) } finally sc.removeSparkListener(l)
+      jobs.get
+    }
+    def batch(i: Long) = Seq((i, s"v$i")).toDF("id", "tag")
     val t = newTable()
-    dataFile(t, "a.parquet", "a", 2)
-    val meta = """{"metaData":{"id":"t","format":{"provider":"parquet"},"schemaString":"{\"type\":\"struct\",\"fields\":[{\"name\":\"tag\",\"type\":\"string\",\"nullable\":true,\"metadata\":{}},{\"name\":\"i\",\"type\":\"long\",\"nullable\":true,\"metadata\":{}}]}","partitionColumns":[]}}"""
-    commit(t, 0, Seq(
-      """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["rowTracking","appendOnly","invariants"]}}""",
-      meta,
-      """{"add":{"path":"a.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true,"baseRowId":10,"defaultRowCommitVersion":0}}"""))
-    def rows = DeltaLog.readWithRowIds(spark, t).orderBy("row_id").collect()
-      .map(r => (r.getAs[Long]("row_id"), r.getAs[Long]("row_commit_version"))).toSeq
-    assert(rows == Seq((10L, 0L), (11L, 0L)))
-    // checkpoint, then delete the JSON prefix: the replay is now
-    // checkpoint-sourced and the identities must still be there
+    (0L to 2L).foreach(i => DeltaLog.append(spark, t, batch(i), txn = Some(("app", i))))
     DeltaLog.writeCheckpoint(spark, t)
-    val fs = new org.apache.hadoop.fs.Path(t)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(f"$t/_delta_log/${0L}%020d.json"), false)
-    assert(rows == Seq((10L, 0L), (11L, 0L)),
-      "baseRowId/defaultRowCommitVersion must survive checkpointing")
+    DeltaLog.append(spark, t, batch(3))
+    // anchored on the checkpoint: one anchor read + the checkpoint file
+    val classic = jobsDuring(assert(DeltaLog.writeCheckpoint(spark, t) == 3L))
+    assert(classic <= 2, s"classic checkpoint ran $classic jobs")
+    // V2 on a JSON-only table (upgrade commit, no anchor): sidecar +
+    // checkpoint file
+    val t2 = newTable()
+    (0L to 2L).foreach(i => DeltaLog.append(spark, t2, batch(i)))
+    val first = jobsDuring(assert(DeltaLog.writeCheckpointV2(spark, t2) == 3L))
+    assert(first <= 2, s"first V2 checkpoint ran $first jobs")
+    // V2 anchored on a V2 checkpoint + sidecar: one anchor read +
+    // sidecar + checkpoint file
+    DeltaLog.append(spark, t2, batch(3))
+    val second = jobsDuring(assert(DeltaLog.writeCheckpointV2(spark, t2) == 4L))
+    assert(second <= 3, s"anchored V2 checkpoint ran $second jobs")
+    assert(DeltaLog.read(spark, t2).count() == 4L)
+    assert(DeltaLog.lastTxnVersion(spark, t, "app").contains(2L))
   }
 
   test("replicateOnce CDF netting: a key-CHANGING update deletes the stale old key") {
